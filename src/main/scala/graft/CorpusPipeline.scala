@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-corpus build CLI — the pipeline-family analogue
@@ -16,6 +17,13 @@ import org.apache.spark.sql.functions._
   * the classifier fourth (the CCNet-style model pass — in production
   * scored via the persisted model artifact, [[pipeline.Classifier
   * .scoreExpr]]), then split/packing over the survivors.
+  *
+  * [[run]] computes each stage once: it writes `retention_report`
+  * (the keep-list joined with the first later-stage drop reason),
+  * reads the kept set back from that artifact, semi-joins the packed
+  * sequences against it and writes `corpus_packed`. The returned
+  * counts are `Observation`s on the two writes, so no job re-runs a
+  * written plan just to count it.
   *
   * Usage: `sbt "runMain graft.CorpusPipeline <sfDir> <outDir>"`.
   * At 100 TB the same lines run on a cluster with the parquet paths
@@ -40,8 +48,7 @@ object CorpusPipeline {
     * never an alphabetical accident of the reason strings
     * (`classifier_low_score` sorts before `quality_*`, which would
     * invert the pipeline order for a doc failing both). */
-  def resolveDropReason(unioned: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  def resolveDropReason(unioned: DataFrame): DataFrame = {
     val stagePriority = when(col("drop_reason") === "benchmark_overlap", 1)
       .when(col("drop_reason").startsWith("quality_"), 2)
       .otherwise(3)
@@ -52,43 +59,50 @@ object CorpusPipeline {
 
   /** The pipeline body, session-agnostic (main's CLI shell around it;
     * CorpusPipelineSpec drives it under the shared test session).
-    * Returns (packed docs kept, total docs). */
-  def run(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      out: String): (Long, Long) = {
+    * The kept set is read back from the written report rather than
+    * recomputed — the standing-state rule of
+    * [[pipeline.Dedup.writeKeeplist]]. Returns (packed docs kept,
+    * total docs), both observed on the writes. */
+  def run(spark: SparkSession, sfDir: String, out: String): (Long, Long) = {
+    val docs = Observation("corpus_docs")
+    val packedDocs = Observation("corpus_packed_docs")
+    retentionFrame(spark, sfDir).observe(docs, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(s"$out/retention_report")
+    // 4. the kept corpus with split + packing coordinates
+    val kept = spark.read.parquet(s"$out/retention_report")
+      .filter(col("keep")).select(col("doc_id"))
+    pipeline.Corpus.packSequences(spark, sfDir)
+      .join(kept, Seq("doc_id"), "left_semi")
+      .observe(packedDocs, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(s"$out/corpus_packed")
+    (packedDocs.get("n").asInstanceOf[Long], docs.get("n").asInstanceOf[Long])
+  }
+
+  /** One verdict per document: the dedup keep-list joined with the
+    * first drop reason of the later stages. Composed only of unsorted
+    * stage frames — a sorted stage function under the drop-reason
+    * Union would plan its own range exchange and sampling job. */
+  private[graft] def retentionFrame(spark: SparkSession, sfDir: String): DataFrame = {
     // 1. retention: exact + near-dup keep/drop decisions per doc
-    // (the unsorted frame — every consumer below joins or aggregates)
     val keep = pipeline.Dedup.keeplistFrame(spark, sfDir)
     // 2. decontamination: docs sharing an n-gram with the benchmark slice
-    val contaminated = pipeline.Dedup.decontaminate(spark, sfDir)
+    val contaminated = pipeline.Dedup.decontaminateFrame(spark, sfDir)
       .select(col("doc_id"), lit("benchmark_overlap").as("drop_reason"))
     // 3. quality rules: length/repetition/heuristic keep-or-drop
-    val lowQuality = pipeline.TextAnalysis.qualityFilter(spark, sfDir)
+    val lowQuality = pipeline.TextAnalysis.qualityFilterFrame(spark, sfDir)
       .filter(!col("keep"))
       .select(col("doc_id"), concat(lit("quality_"), col("reason")).as("drop_reason"))
     // 3b. model-based quality: docs the classifier scores below the ½
     // keep threshold (reference-likeness — the CCNet model pass)
-    val lowScore = pipeline.Classifier.score(spark, sfDir)
+    val lowScore = pipeline.Classifier.scoreFrame(spark, sfDir)
       .filter(!col("predicted_ref"))
       .select(col("doc_id"), lit("classifier_low_score").as("drop_reason"))
     val drops = resolveDropReason(
       contaminated.unionByName(lowQuality).unionByName(lowScore))
-    // 4. the kept corpus with split + packing coordinates
-    val kept = keep.filter(col("keep"))
-      .join(drops, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"))
-    val packed = pipeline.Corpus.packSequences(spark, sfDir)
-      .join(kept, Seq("doc_id"), "left_semi")
-
-    packed.write.mode("overwrite").parquet(s"$out/corpus_packed")
     keep.join(drops, Seq("doc_id"), "left")
       .select(col("doc_id"),
         when(col("drop_reason").isNotNull && col("keep"), col("drop_reason"))
           .otherwise(col("reason")).as("reason"),
         (col("keep") && col("drop_reason").isNull).as("keep"))
-      .write.mode("overwrite").parquet(s"$out/retention_report")
-
-    val n = Tables.documents(spark, sfDir).count()
-    val nKept = packed.count()
-    (nKept, n)
   }
 }

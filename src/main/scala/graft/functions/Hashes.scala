@@ -8,8 +8,11 @@ import org.apache.spark.sql.functions._
   *
   * Everything here is expressed twice from one definition: as a Spark
   * `Column` tree (higher-order functions — `transform` / `aggregate` /
-  * `filter` — all whole-stage-codegen'd, no UDFs) and as the equivalent
-  * DuckDB SQL string for the driver's oracle. The arithmetic is
+  * `filter`, no UDFs) and as the equivalent DuckDB SQL string for the
+  * correctness oracle. The higher-order functions are interpreted
+  * (CodegenFallback), not whole-stage-codegen'd; the hot per-row paths
+  * use the native kernels [[Tokens]], [[WordShingles]] and
+  * [[ShingleHash]] instead. The arithmetic is
   * integer-exact (mod 2^31−1 fits in int64 at every intermediate step)
   * so both engines produce bit-identical values under any partitioning.
   *
@@ -64,15 +67,6 @@ object Hashes {
         (acc * B + element_at(sig, b * RowsPerBand + r + 1)) % M
       }
     }: _*)
-
-  /** 32-bit SimHash over a distinct-hash array: bit i set iff the
-    * popcount-weighted sum of shingle-hash bit i is positive. */
-  def simhash32(hashes: Column): Column =
-    (0 until 32).map { i =>
-      when(aggregate(hashes, lit(0L),
-        (acc, h) => acc + (shiftright(h, i).bitwiseAND(lit(1L)) * 2L - 1L)) > 0,
-        lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   // ---------------------------------------------------------------- DuckDB side
 

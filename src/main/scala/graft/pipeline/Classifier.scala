@@ -175,7 +175,13 @@ object Classifier {
     * an explode emits nothing for an empty array). The model side is
     * [[ModelSize]]-bounded, hence broadcast; the only corpus shuffle
     * is the doc_id aggregate. */
-  def score(spark: SparkSession, dir: String): DataFrame = {
+  def score(spark: SparkSession, dir: String): DataFrame =
+    scoreFrame(spark, dir).orderBy(col("doc_id"))
+
+  /** [[score]] without the presentation sort — the frame the
+    * corpus-build pipeline filters and unions with the other drop
+    * reasons (the keeplistFrame rule). */
+  private[graft] def scoreFrame(spark: SparkSession, dir: String): DataFrame = {
     val model = train(spark, dir)
       .select(col("token"), col("weight").cast("decimal(20,9)").as("w"))
     val perDoc = occurrences(spark, dir)
@@ -193,7 +199,6 @@ object Classifier {
           lit(0.0)))
       .select(col("doc_id"), col("source"), col("is_ref"), col("n_tokens"),
         col("n_known"), col("score"), (col("score") >= 0.5).as("predicted_ref"))
-      .orderBy(col("doc_id"))
   }
 
   private val scoredCte: String =

@@ -549,7 +549,14 @@ object Dedup {
     * the 100 TB corpus side stays a map-side probe: no corpus-keyed
     * shuffle anywhere, the only exchange is the per-doc count
     * aggregation over the (rare) colliding rows. */
-  def decontaminate(spark: SparkSession, dir: String): DataFrame = {
+  def decontaminate(spark: SparkSession, dir: String): DataFrame =
+    decontaminateFrame(spark, dir).orderBy(col("doc_id"))
+
+  /** [[decontaminate]] without the presentation sort — the frame the
+    * corpus-build pipeline unions with the other drop reasons (a sort
+    * under a Union survives optimisation as its own range exchange
+    * and sampling job — the keeplistFrame rule). */
+  private[graft] def decontaminateFrame(spark: SparkSession, dir: String): DataFrame = {
     val sh = docs(spark, dir)
       .select(col("doc_id"),
         graft.functions.Tokens.tokens(col("text")).as("toks"))
@@ -563,7 +570,6 @@ object Dedup {
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("bench_doc_id")).as("n_benchmark_docs"),
         countDistinct(col("shingle")).as("n_shared_shingles"))
-      .orderBy(col("doc_id"))
   }
 
   val decontaminateSql: String =

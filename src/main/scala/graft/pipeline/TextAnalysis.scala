@@ -584,7 +584,7 @@ object TextAnalysis {
     * corpus-clean pipeline composes with (its next step is a join, so
     * a global sort exchange here would be pure waste — the
     * keeplistFrame rule). */
-  private[pipeline] def qualityFilterFrame(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def qualityFilterFrame(spark: SparkSession, dir: String): DataFrame = {
     val r = repetition(spark, dir).select("doc_id", "n_tokens",
       "top_token_frac", "dup_token_frac", "top_bigram_frac")
     val q = quality(spark, dir).select("doc_id", "quality_score")

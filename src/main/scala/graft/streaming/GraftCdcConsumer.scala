@@ -450,7 +450,8 @@ final class GraftCdcConsumer private[streaming] (
   /** Deliver one micro-batch with the configured retry schedule
     * (reference: Worker loop + ExponentialRetryBackoffWithJitter).
     * Only non-fatal errors retry; interrupts (query.stop())
-    * propagate immediately. */
+    * propagate immediately. Each retry logs one WARN line with the
+    * failed attempt's number, the backoff and the error. */
   private def deliverWithRetry(sourceName: String, batch: Dataset[Delivered]): Unit = {
     // supplier mode: hold the micro-batch until the master's first
     // timeline discovery (see firstTimelineLatch) — micro-batch
@@ -535,8 +536,11 @@ final class GraftCdcConsumer private[streaming] (
         case e: Throwable if scala.util.control.NonFatal(e) &&
             !e.isInstanceOf[CallbackBatchTooLargeException] &&
             attempt < maxRetryAttempts =>
-          Thread.sleep(backoff.getRetryBackoffTimeMs(attempt).toLong)
+          val waitMs = backoff.getRetryBackoffTimeMs(attempt).toLong
           attempt += 1
+          GraftCdcConsumer.log.warn(s"delivery retry: query=$queryName source=$sourceName " +
+            s"attempt=$attempt backoff_ms=$waitMs error=${e.getClass.getName}: ${e.getMessage}")
+          Thread.sleep(waitMs)
       }
     }
   }
@@ -607,6 +611,9 @@ final class GraftCdcConsumer private[streaming] (
 }
 
 object GraftCdcConsumer {
+  private val log =
+    org.apache.logging.log4j.LogManager.getLogger(classOf[GraftCdcConsumer])
+
   def builder(spark: SparkSession): GraftCdcConsumerBuilder =
     new GraftCdcConsumerBuilder(spark)
 }

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.pipeline.{Classifier, Corpus, Dedup, TextAnalysis}
 
 /** End-to-end corpus-build CLI smoke — the pipeline-family analogue of
   * ReplicateSpec: the composed dedup → decontaminate → quality → pack
@@ -8,6 +11,13 @@ import org.apache.spark.sql.functions._
 class CorpusPipelineSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
+
+  /** Same columns (name and type, in order) and the same multiset of rows. */
+  private def assertSameRows(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema.map(f => f.name -> f.dataType) == want.schema.map(f => f.name -> f.dataType))
+    assert(got.exceptAll(want).isEmpty, "rows missing from the expected frame")
+    assert(want.exceptAll(got).isEmpty, "expected rows missing from the output")
+  }
 
   test("pipeline writes a packed corpus and a consistent retention report") {
     val out = java.nio.file.Files.createTempDirectory("graft_corpus").toString
@@ -30,6 +40,42 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(report.filter(!col("keep") && col("reason") === "kept").isEmpty)
     val reasons = report.select(col("reason")).distinct().collect().map(_.getString(0)).toSet
     assert(reasons.contains("kept"))
+  }
+
+  test("one-pass run equals the sorted stage functions composed stage by stage") {
+    val out = java.nio.file.Files.createTempDirectory("graft_corpus_eq").toString
+    val (nKept, n) = CorpusPipeline.run(spark, dir, out)
+    val report = spark.read.parquet(s"$out/retention_report")
+    val packed = spark.read.parquet(s"$out/corpus_packed")
+
+    // every stage recomputed from its public (sorted) function
+    val keep = Dedup.keeplist(spark, dir)
+    val drops = CorpusPipeline.resolveDropReason(
+      Dedup.decontaminate(spark, dir)
+        .select(col("doc_id"), lit("benchmark_overlap").as("drop_reason"))
+        .unionByName(TextAnalysis.qualityFilter(spark, dir).filter(!col("keep"))
+          .select(col("doc_id"), concat(lit("quality_"), col("reason")).as("drop_reason")))
+        .unionByName(Classifier.score(spark, dir).filter(!col("predicted_ref"))
+          .select(col("doc_id"), lit("classifier_low_score").as("drop_reason"))))
+    val kept = keep.filter(col("keep"))
+      .join(drops, Seq("doc_id"), "left_anti")
+      .select(col("doc_id"))
+    assertSameRows(report, keep.join(drops, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        when(col("drop_reason").isNotNull && col("keep"), col("drop_reason"))
+          .otherwise(col("reason")).as("reason"),
+        (col("keep") && col("drop_reason").isNull).as("keep")))
+    assertSameRows(packed, Corpus.packSequences(spark, dir).join(kept, Seq("doc_id"), "left_semi"))
+
+    // the observed counts are the written row counts
+    assert(n == report.count())
+    assert(nKept == packed.count())
+  }
+
+  test("the retention report composes unsorted stage frames: no range exchange") {
+    val plan = CorpusPipeline.retentionFrame(spark, dir).queryExecution.executedPlan.toString
+    assert(plan.contains("hashpartitioning"), plan)
+    assert(!plan.contains("rangepartitioning"), plan)
   }
 
   test("drop-reason precedence follows the documented stage order, not string sort") {

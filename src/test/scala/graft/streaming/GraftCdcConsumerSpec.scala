@@ -3,6 +3,10 @@ package graft.streaming
 import graft.SparkSpec
 import graft.cdc.ExponentialRetryBackoffWithJitter
 import graft.streaming.CdcStreamConsumer.{Change, Delivered}
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import java.util.concurrent.ConcurrentLinkedQueue
@@ -583,15 +587,38 @@ class GraftCdcConsumerSpec extends SparkSpec {
       .withQueryTimeWindowSizeMs(100)
       .withQueryName(s"spec_retry_${System.nanoTime()}")
       .build()
+    // capture the consumer's WARN lines for the duration of the run
+    val warnings = new ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("spec-retry-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(classOf[GraftCdcConsumer]).asInstanceOf[CoreLogger]
+    val level = logger.getLevel
+    logger.addAppender(capture)
+    logger.setLevel(Level.WARN)
     try {
       c.start()
       input.addData(Seq(Change(3, ms(10), 1, 2, 0.0), Change(3, ms(20), 2, 1, 0.0)))
       c.processAllAvailable()
       input.addData(Seq(Change(9, ms(100000), 99, 2, 0.0))) // nudge
       c.processAllAvailable()
-    } finally c.stop()
+    } finally {
+      c.stop()
+      logger.removeAppender(capture)
+      logger.setLevel(level)
+      capture.stop()
+    }
 
     assert(failures.get() == 1) // the injected error fired
+    // the retry is visible: one WARN naming the attempt, backoff and error
+    val retries = warnings.asScala.filter(_.startsWith("delivery retry:")).toSeq
+    assert(retries.size == 1, warnings)
+    assert(retries.head.contains("attempt=1 "), retries.head)
+    assert(retries.head.matches(".* backoff_ms=\\d+ .*"), retries.head)
+    assert(retries.head.contains("error=java.lang.RuntimeException: injected"), retries.head)
     val s3 = received.asScala.filter(_.streamId == 3).toSeq.sortBy(_.timeUs)
     // at-least-once on retry, like the reference's window re-read
     assert(s3.map(_.timeUs).distinct == Seq(ms(10), ms(20)))
